@@ -8,8 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SURVEY.md §2 (reference parity, [[graft.queries.Parity]]) plus the
   * LLM-data-pipeline extension surface §2.10 ([[graft.queries.Ext]]).
   * `oracleSql` carries the DuckDB-equivalent SQL for the driver's
-  * differential correctness gate; queries without an entry get the weaker
-  * rows-only check (non-SQL-expressible ops: seeded MinHash/SimHash, LSH).
+  * differential correctness gate, one entry per query.
   */
 object SparkEntry {
 
@@ -19,25 +18,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_fact_summary")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Parity.queries ++ graft.queries.Ext.queries ++
-      graft.queries.Ext2.queries ++ graft.queries.Ext3.queries ++
-      graft.queries.Ext4.queries ++ graft.queries.Ext5.queries ++
-      graft.queries.Ext6.queries ++ graft.queries.Ext7.queries ++
-      graft.queries.Ext8.queries ++ graft.queries.Ext9.queries ++
-      graft.queries.Ext10.queries ++ graft.queries.Ext11.queries ++
-      graft.queries.Ext12.queries ++ graft.queries.Ext13.queries ++
-      graft.queries.Ext14.queries ++
-      graft.queries.Ext15.queries ++ graft.queries.Ext16.queries
+  /** The catalog objects; `queries` and `oracleSql` are their union.
+    * ContractSpec checks that no two objects share a name. */
+  val catalog: Seq[graft.queries.Catalog] = {
+    import graft.queries._
+    Seq(Parity, Ext, Ext2, Ext3, Ext4, Ext5, Ext6, Ext7, Ext8, Ext9,
+      Ext10, Ext11, Ext12, Ext13, Ext14, Ext15, Ext16)
+  }
 
-  def oracleSql: Map[String, String] =
-    graft.queries.Parity.oracle ++ graft.queries.Ext.oracle ++
-      graft.queries.Ext2.oracle ++ graft.queries.Ext3.oracle ++
-      graft.queries.Ext4.oracle ++ graft.queries.Ext5.oracle ++
-      graft.queries.Ext6.oracle ++ graft.queries.Ext7.oracle ++
-      graft.queries.Ext8.oracle ++ graft.queries.Ext9.oracle ++
-      graft.queries.Ext10.oracle ++ graft.queries.Ext11.oracle ++
-      graft.queries.Ext12.oracle ++ graft.queries.Ext13.oracle ++
-      graft.queries.Ext14.oracle ++
-      graft.queries.Ext15.oracle ++ graft.queries.Ext16.oracle
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.flatMap(_.queries).toMap
+
+  val oracleSql: Map[String, String] = catalog.flatMap(_.oracle).toMap
 }

@@ -2,8 +2,8 @@ package graft
 
 /** Driver-contract consistency: the gate silently downgrades any query
   * whose oracle key doesn't match (rows-only check instead of
-  * hash-compare), and a duplicate query name across Parity/Ext would
-  * silently shadow one implementation — both must be build failures
+  * hash-compare), and a duplicate query name across catalog objects
+  * would silently shadow one implementation — both must be build failures
   * here, not silent grade losses. */
 class ContractSpec extends SparkSpec {
 
@@ -30,6 +30,15 @@ class ContractSpec extends SparkSpec {
     val oracleOverlap = graft.queries.Parity.oracle.keySet
       .intersect(graft.queries.Ext.oracle.keySet)
     assert(oracleOverlap.isEmpty, s"shadowed oracles: $oracleOverlap")
+  }
+
+  test("no two catalog objects share a query or oracle name") {
+    val cat = SparkEntry.catalog
+    assert(cat.map(_.queries.size).sum == SparkEntry.queries.size,
+      "a query name is declared by two catalog objects")
+    assert(cat.map(_.oracle.size).sum == SparkEntry.oracleSql.size,
+      "an oracle name is declared by two catalog objects")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("graded-surface census matches the documented counts") {

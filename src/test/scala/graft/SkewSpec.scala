@@ -132,6 +132,15 @@ class SkewSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism)
   }
 
+  test("sizedParallelism reads the advisory size with Spark's byte-string units") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val df = spark.range(256).toDF() // optimizer estimate: 256 × 8 = 2048 bytes
+    try Seq("1tb" -> 1, "64MB" -> 1, "1k" -> 2).foreach { case (size, want) =>
+      spark.conf.set(key, size)
+      assert(Skew.sizedParallelism(df) == want, s"advisory $size")
+    } finally spark.conf.unset(key)
+  }
+
   test("checkpointCount returns the frame AND its count in one action") {
     val df = spark.range(100).select($"id", ($"id" % 3).as("g"))
       .groupBy("g").agg(count(lit(1)).as("n"))
